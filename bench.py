@@ -320,9 +320,8 @@ def scaling_run(cpus: int, sf_dir: str, frac: int = 1) -> dict:
             n_extra_per_tile=3000 // frac, tiles=tiles, spread=0.35,
             date_lo=0, date_hi=236,
         ).drop(columns=["mgrs_tile_id"])
-        # read the pruned partition DIRECTORY directly: DataFrame.inputFiles
-        # (used by the payload_source='files' reader) lists the scan's file
-        # index before filters, so directory-level selection is explicit
+        # read the pruned partition DIRECTORY directly, so directory-level
+        # selection is explicit
         if frac > 1:
             images = spark.read.parquet(os.path.join(SCALING_CACHE, "gbucket=0"))
         else:
@@ -354,7 +353,6 @@ def scaling_run(cpus: int, sf_dir: str, frac: int = 1) -> dict:
             n_chips = extract_chips(
                 records, images, chip_size=cfg.chip_size, window_size=cfg.window_size,
                 mask_types=cfg.mask_types, masking_strategy=cfg.masking_strategy,
-                payload_source="files",
             ).count()
             dt = time.time() - t0
             best = dt if best is None else min(best, dt)
@@ -362,8 +360,7 @@ def scaling_run(cpus: int, sf_dir: str, frac: int = 1) -> dict:
         # composite wall-time number
         t0 = time.time()
         run_chip_pipeline(
-            spark.createDataFrame(obs), spark.createDataFrame(cat), images, cfg,
-            payload_source="files",
+            spark.createDataFrame(obs), spark.createDataFrame(cat), images, cfg
         ).count()
         pipeline_sec = round(time.time() - t0, 3)
         chip = {

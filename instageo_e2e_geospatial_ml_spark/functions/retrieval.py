@@ -27,7 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .text import spread_input, tokens
+from ..session import spread_input
+from .text import tokens
 
 
 def bm25_scores(
@@ -403,7 +404,7 @@ def trending_terms(
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from .text import spread_input, tokens
+    from .text import tokens
 
     tok = docs.select(
         F.col(group_col).alias("g"),

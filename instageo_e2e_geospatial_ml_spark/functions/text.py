@@ -10,26 +10,13 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..session import spread_input
+
 
 def tokens(text: Column | str) -> Column:
     """Whitespace tokenization of trimmed text."""
     c = F.col(text) if isinstance(text, str) else text
     return F.split(F.trim(c), r"\s+")
-
-
-def spread_input(df):
-    """Spread rows across the cluster before an explode-heavy stage
-    (operators/dedup._ensure_parallelism twin — guide §2.5 'input skew':
-    a small one-file parquet table scans as ONE task, but tokenize +
-    explode multiplies per-row work ~100×, making that task the whole
-    job's critical path). No-op when the scan already has enough
-    partitions — the 100 TB case, where an extra shuffle would be waste."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    files = df.inputFiles()
-    current = len(files) if files else df.rdd.getNumPartitions()
-    if current < target:
-        return df.repartition(target)
-    return df
 
 
 def token_count(text: Column | str) -> Column:

@@ -25,10 +25,7 @@ Scale properties:
     cells naturally — no explicit salting needed (a single cell's work is
     bounded by chip_size² × bands regardless of observation count; only
     the collect_list of a pathologically popular cell can skew, which a
-    pre-aggregation cap would bound);
-  * the (granule → cells) map is broadcast when small (default); set
-    broadcast_cells=False to shuffle-join instead at extreme catalog
-    sizes.
+    pre-aggregation cap would bound).
 """
 
 from __future__ import annotations
@@ -246,13 +243,10 @@ def extract_chips(
     band_order: tuple[str, ...] = ("B02", "B03", "B04", "B8A", "B11", "B12"),
     mask_band: str = "Fmask",
     no_data_value: int = HLS_NDV,
-    broadcast_cells: bool = True,
     transform_overrides: dict | None = None,
     label_band: str | None = None,
     data_source: str = "HLS",
-    payload_source: str = "rows",
     n_salt: int = 0,  # obsolete (kept for API compat): cell grouping bounds skew structurally
-    max_wants_granules: int = 200_000,
     decode_counter=None,
 ) -> DataFrame:
     """records(stac_items_str, granules, x, y, date, label) × images
@@ -268,18 +262,6 @@ def extract_chips(
     band of the first timestep instead of rasterized from observation
     points — the reference's raster_chip_creator path (R9,
     raster_chip_creator.py:83-210, hls_utils.py:325-411).
-
-    payload_source: 'rows' (default) streams image bytes from the Spark
-    scan through Arrow; 'files' has Python tasks read the parquet
-    payloads directly with pyarrow (vectorized-reader pattern — pixels
-    never cross the JVM↔Python socket; requires a file-backed table).
-    Both produce identical output.
-
-    max_wants_granules is obsolete (kept for API compat): the 'files'
-    path no longer driver-collects its wants map — it materializes
-    `wants` as a granule-sorted scratch parquet and each task does a
-    pyarrow filtered read for only the granules its files contain, so
-    both paths scale to any granule count.
     """
     mask_types = list(mask_types)
     overrides = dict(transform_overrides or {})
@@ -348,11 +330,11 @@ def extract_chips(
         F.col("cy").alias("w_cy"),
         F.posexplode("granules").alias("t", "granule_id"),
     )
-    wants = cells_small.groupBy("granule_id").agg(
-        F.collect_list(F.struct("w_sis", "w_cx", "w_cy", "t")).alias("wants")
+    wants = F.broadcast(
+        cells_small.groupBy("granule_id").agg(
+            F.collect_list(F.struct("w_sis", "w_cx", "w_cy", "t")).alias("wants")
+        )
     )
-    if broadcast_cells:
-        wants = F.broadcast(wants)
 
     def _slice_one(rows_out: list, image_id: str, buf: bytes, w: int, h: int,
                    fmt: str, wants_list) -> None:
@@ -383,119 +365,25 @@ def extract_chips(
 
     _SLICE_COLS = ["sis", "scx", "scy", "t", "band", "dt", "data", "w", "h"]
 
-    if payload_source == "rows":
-        img = (
-            images.withColumn("granule_id", F.split("image_id", ":").getItem(0))
-            .withColumn("band", F.split("image_id", ":").getItem(1))
-            .filter(F.col("band").isin(list(wanted_bands)))
-            .select("image_id", "bytes", "w", "h", "fmt", "granule_id")
-        )
-        tasks = img.join(wants, "granule_id")
+    img = (
+        images.withColumn("granule_id", F.split("image_id", ":").getItem(0))
+        .withColumn("band", F.split("image_id", ":").getItem(1))
+        .filter(F.col("band").isin(list(wanted_bands)))
+        .select("image_id", "bytes", "w", "h", "fmt", "granule_id")
+    )
+    tasks = img.join(wants, "granule_id")
 
-        def slice_images(it):
-            for pdf in it:
-                rows: list = []
-                for r in pdf.itertuples(index=False):
-                    _slice_one(
-                        rows, r.image_id, bytes(r.bytes), int(r.w), int(r.h),
-                        r.fmt, r.wants,
-                    )
-                yield pd.DataFrame(rows, columns=_SLICE_COLS)
+    def slice_images(it):
+        for pdf in it:
+            rows: list = []
+            for r in pdf.itertuples(index=False):
+                _slice_one(
+                    rows, r.image_id, bytes(r.bytes), int(r.w), int(r.h),
+                    r.fmt, r.wants,
+                )
+            yield pd.DataFrame(rows, columns=_SLICE_COLS)
 
-        slices = tasks.mapInPandas(slice_images, SLICE_SCHEMA)
-    elif payload_source == "files":
-        # vectorized-reader path: Python tasks read the parquet payloads
-        # directly (pyarrow, page-cache mmap) — image bytes NEVER cross the
-        # JVM↔Python socket. This is the pattern a DataSource-v2 vectorized
-        # reader gives on a real cluster; locally it sidesteps the
-        # IPC/syscall ceiling.
-        #
-        # The (granule → wanted cells) map is an EXECUTOR-SIDE LOOKUP, not
-        # a driver collect: `wants` is materialized once as a granule-sorted
-        # scratch parquet, and each task does a pyarrow filtered read for
-        # only the granule ids its own files contain (row-group stats prune
-        # the rest). Per-task memory is proportional to the task's actual
-        # work, so there is no granule cap on this path. On a real cluster
-        # the scratch dir would be a shared filesystem path (HDFS/S3);
-        # locally it is a temp dir cleaned up at process exit.
-        import atexit
-        import shutil
-        import tempfile
-
-        spark = images.sparkSession
-        paths = [p for p in images.inputFiles()]
-        if not paths:
-            raise ValueError("payload_source='files' requires a file-backed images table")
-        wants_dir = tempfile.mkdtemp(prefix="chip_wants_")
-        atexit.register(shutil.rmtree, wants_dir, ignore_errors=True)
-        n_wants_files = max(1, min(32, spark.sparkContext.defaultParallelism))
-        (
-            wants.repartitionByRange(n_wants_files, "granule_id")
-            .sortWithinPartitions("granule_id")
-            .write.mode("overwrite")
-            .parquet(wants_dir)
-        )
-        bands_bc = spark.sparkContext.broadcast(set(wanted_bands))
-        files_df = spark.createDataFrame(
-            [(p,) for p in sorted(paths)], "path string"
-        ).repartition(min(len(paths), spark.sparkContext.defaultParallelism * 4))
-
-        def slice_files(it):
-            import pyarrow.parquet as pq
-
-            wb = bands_bc.value
-            for pdf in it:
-                rows: list = []
-                for path in pdf["path"]:
-                    local = path[7:] if path.startswith("file:") else path
-                    pf = pq.ParquetFile(local)
-                    # pass 1: cheap id-column scan → the granules this file
-                    # actually needs wants for
-                    per_rg_ids = []
-                    needed: set = set()
-                    for rg in range(pf.num_row_groups):
-                        ids = pf.read_row_group(rg, columns=["image_id"])[
-                            "image_id"
-                        ].to_pylist()
-                        per_rg_ids.append(ids)
-                        for iid in ids:
-                            gid, _, band = iid.partition(":")
-                            if band in wb:
-                                needed.add(gid)
-                    if not needed:
-                        continue
-                    wtbl = pq.read_table(
-                        wants_dir,
-                        columns=["granule_id", "wants"],
-                        filters=[("granule_id", "in", sorted(needed))],
-                    )
-                    wm = dict(
-                        zip(wtbl["granule_id"].to_pylist(), wtbl["wants"].to_pylist())
-                    )
-                    for rg, ids in enumerate(per_rg_ids):
-                        keep = []
-                        for i, iid in enumerate(ids):
-                            gid, _, band = iid.partition(":")
-                            if band in wb and gid in wm:
-                                keep.append(i)
-                        if not keep:
-                            continue
-                        tbl = pf.read_row_group(
-                            rg, columns=["image_id", "bytes", "w", "h", "fmt"]
-                        )
-                        for i in keep:
-                            iid = tbl["image_id"][i].as_py()
-                            gid = iid.partition(":")[0]
-                            _slice_one(
-                                rows, iid, tbl["bytes"][i].as_py(),
-                                tbl["w"][i].as_py(), tbl["h"][i].as_py(),
-                                tbl["fmt"][i].as_py(), wm[gid],
-                            )
-                yield pd.DataFrame(rows, columns=_SLICE_COLS)
-
-        slices = files_df.mapInPandas(slice_files, SLICE_SCHEMA)
-    else:
-        raise ValueError(payload_source)
+    slices = tasks.mapInPandas(slice_images, SLICE_SCHEMA)
 
     # --- stage C: assemble chips -------------------------------------------
     def assemble(sl_pdf: pd.DataFrame, obs_pdf: pd.DataFrame) -> pd.DataFrame:

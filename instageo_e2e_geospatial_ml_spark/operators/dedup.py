@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint, tokens
+from ..session import spread_input
 
 
 def exact_dedup(
@@ -47,30 +48,9 @@ def keep_min_per_key(df: DataFrame, key_col: str, id_col: str = "doc_id") -> Dat
     return df.join(keepers, [key_col, id_col], "left_semi")
 
 
-def _ensure_parallelism(df: DataFrame) -> DataFrame:
-    """Spread rows across the cluster before an explode-heavy stage.
-
-    A small input (one parquet file) scans as ONE task, but the shingle /
-    hash explode multiplies per-row work ~100×, so that one task becomes
-    the whole job's critical path. No-op when the scan already has enough
-    partitions — the 100 TB case, where adding a shuffle here would be
-    pure waste. Sizing uses inputFiles() (cheap plan metadata) for
-    file-backed frames; a non-file-backed frame (createDataFrame, a
-    post-join intermediate) has an empty inputFiles() list, so for those
-    we fall back to df.rdd.getNumPartitions() — the RDD-conversion cost
-    only hits the in-memory path, and it avoids an unconditional shuffle
-    of frames that are already well spread."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    files = df.inputFiles()
-    current = len(files) if files else df.rdd.getNumPartitions()
-    if current < target:
-        return df.repartition(target)
-    return df
-
-
 def shingles(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
     """Word n-gram shingles, exploded to (doc, shingle) rows."""
-    docs = _ensure_parallelism(docs)
+    docs = spread_input(docs)
     t = tokens(text_col)
     parts = [F.element_at(F.col("_toks"), F.col("_i") + i) for i in range(n)]
     return (
@@ -201,7 +181,7 @@ def simhash(
     """SimHash over whitespace tokens: per-bit ±1 votes from a 16-bit md5
     prefix per token → (doc_id, simhash)."""
     tok = (
-        _ensure_parallelism(docs).select(id_col, F.explode(tokens(text_col)).alias("tok"))
+        spread_input(docs).select(id_col, F.explode(tokens(text_col)).alias("tok"))
         .withColumn("th", F.conv(F.substring(F.md5("tok"), 1, 4), 16, 10).cast("long"))
     )
     votes = (
@@ -429,7 +409,7 @@ def winnow_fingerprints(
 
 def shingles_with_pos(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
     """Word n-gram shingles keeping the 1-based start position `_i`."""
-    docs = _ensure_parallelism(docs)
+    docs = spread_input(docs)
     t = tokens(text_col)
     parts = [F.element_at(F.col("_toks"), F.col("_i") + i) for i in range(n)]
     return (
@@ -518,6 +498,69 @@ def dedup_clusters(
         if converged:
             break
     return labels.select(F.col("u").alias("doc_id"), F.col("lbl").alias("cluster_id"))
+
+
+_DB_OFF = 1 << 20  # coordinate offset so negative cells stay positive
+_DB_K = 1 << 21    # cell-key stride
+
+
+def grid_dbscan(
+    points: DataFrame,
+    x_col: str = "px",
+    y_col: str = "py",
+    cell_size: int = 64,
+    min_pts: int = 50,
+) -> DataFrame:
+    """Grid DBSCAN (the GriDBSCAN / CLIQUE cell-density family): cluster
+    DENSE CELLS — cells holding >= min_pts points — by 8-neighborhood
+    connectivity. Returns one row per dense cell: (cell_x, cell_y,
+    n_points, cluster_id) with cluster_id = min cell key in the
+    component; points in sparse cells are noise (not emitted).
+
+    This is the scalable DBSCAN surrogate: point-level DBSCAN needs an
+    eps-radius neighbor join over every point, while the grid form
+    aggregates points once (map-side partials -> #cells rows) and runs
+    all remaining work on the CELL table, which is smaller than the
+    input by the mean cell occupancy. Connectivity reuses
+    dedup_clusters' pointer-jumping components (O(log diameter)
+    rounds), so a continent-sized dense blob converges without a
+    driver-side loop. Edges come from an 8-offset explode + equi-join on
+    neighbor key — never a spatial theta join; self-edges keep isolated
+    dense cells as their own single-cell clusters.
+    """
+    cx = F.floor(F.col(x_col) / F.lit(cell_size)).cast("long")
+    cy = F.floor(F.col(y_col) / F.lit(cell_size)).cast("long")
+    cells = (
+        points.select(cx.alias("cx"), cy.alias("cy"))
+        .groupBy("cx", "cy")
+        .agg(F.count(F.lit(1)).alias("n_points"))
+        .filter(F.col("n_points") >= min_pts)
+        .withColumn(
+            "key", (F.col("cx") + _DB_OFF) * F.lit(_DB_K) + F.col("cy") + _DB_OFF
+        )
+    )
+    offsets = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1) if (dx, dy) != (0, 0)]
+    off = points.sparkSession.createDataFrame(offsets, "dx long, dy long")
+    nbr = (
+        cells.select("cx", "cy", "key")
+        .join(F.broadcast(off))
+        .select(
+            "key",
+            ((F.col("cx") + F.col("dx") + _DB_OFF) * F.lit(_DB_K)
+             + F.col("cy") + F.col("dy") + _DB_OFF).alias("nkey"),
+        )
+    )
+    edges = nbr.join(
+        cells.select(F.col("key").alias("nkey")), "nkey"
+    ).select(F.col("key").alias("doc_a"), F.col("nkey").alias("doc_b"))
+    self_edges = cells.select(
+        F.col("key").alias("doc_a"), F.col("key").alias("doc_b")
+    )
+    comp = dedup_clusters(edges.unionByName(self_edges))
+    return (
+        cells.join(comp.withColumnRenamed("doc_id", "key"), "key")
+        .select("cx", "cy", "n_points", F.col("cluster_id"))
+    )
 
 
 def ngram_jaccard_pairs(

@@ -49,68 +49,3 @@ def density_filter(
         out = obs.join(F.broadcast(counts), key, "left")
     out = out.filter(F.col("counts") >= F.lit(min_count))
     return out if keep_counts else out.drop("counts")
-
-
-_DB_OFF = 1 << 20  # coordinate offset so negative cells stay positive
-_DB_K = 1 << 21    # cell-key stride
-
-
-def grid_dbscan(
-    points: DataFrame,
-    x_col: str = "px",
-    y_col: str = "py",
-    cell_size: int = 64,
-    min_pts: int = 50,
-) -> DataFrame:
-    """Grid DBSCAN (the GriDBSCAN / CLIQUE cell-density family): cluster
-    DENSE CELLS — cells holding >= min_pts points — by 8-neighborhood
-    connectivity. Returns one row per dense cell: (cell_x, cell_y,
-    n_points, cluster_id) with cluster_id = min cell key in the
-    component; points in sparse cells are noise (not emitted).
-
-    This is the scalable DBSCAN surrogate: point-level DBSCAN needs an
-    eps-radius neighbor join over every point, while the grid form
-    aggregates points once (map-side partials -> #cells rows) and runs
-    all remaining work on the CELL table, which is smaller than the
-    input by the mean cell occupancy. Connectivity reuses
-    dedup.dedup_clusters' pointer-jumping components (O(log diameter)
-    rounds), so a continent-sized dense blob converges without a
-    driver-side loop. Edges come from an 8-offset explode + equi-join on
-    neighbor key — never a spatial theta join; self-edges keep isolated
-    dense cells as their own single-cell clusters.
-    """
-    from .dedup import dedup_clusters
-
-    cx = F.floor(F.col(x_col) / F.lit(cell_size)).cast("long")
-    cy = F.floor(F.col(y_col) / F.lit(cell_size)).cast("long")
-    cells = (
-        points.select(cx.alias("cx"), cy.alias("cy"))
-        .groupBy("cx", "cy")
-        .agg(F.count(F.lit(1)).alias("n_points"))
-        .filter(F.col("n_points") >= min_pts)
-        .withColumn(
-            "key", (F.col("cx") + _DB_OFF) * F.lit(_DB_K) + F.col("cy") + _DB_OFF
-        )
-    )
-    offsets = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1) if (dx, dy) != (0, 0)]
-    off = points.sparkSession.createDataFrame(offsets, "dx long, dy long")
-    nbr = (
-        cells.select("cx", "cy", "key")
-        .join(F.broadcast(off))
-        .select(
-            "key",
-            ((F.col("cx") + F.col("dx") + _DB_OFF) * F.lit(_DB_K)
-             + F.col("cy") + F.col("dy") + _DB_OFF).alias("nkey"),
-        )
-    )
-    edges = nbr.join(
-        cells.select(F.col("key").alias("nkey")), "nkey"
-    ).select(F.col("key").alias("doc_a"), F.col("nkey").alias("doc_b"))
-    self_edges = cells.select(
-        F.col("key").alias("doc_a"), F.col("key").alias("doc_b")
-    )
-    comp = dedup_clusters(edges.unionByName(self_edges))
-    return (
-        cells.join(comp.withColumnRenamed("doc_id", "key"), "key")
-        .select("cx", "cy", "n_points", F.col("cluster_id"))
-    )

@@ -89,7 +89,7 @@ def _radius_pairs(
     # the candidate join + exact refine is compute-heavy per point row; a
     # few-row-group local scan would otherwise run it in 1-6 tasks
     # (guide §2.5 input skew — no-op when the scan is already spread)
-    from ..functions.text import spread_input
+    from ..session import spread_input
 
     p = spread_input(points).withColumn("cell", cell_of(px, py, res))
     j = q.join(p, "cell", "inner")

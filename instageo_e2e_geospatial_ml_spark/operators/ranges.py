@@ -84,7 +84,7 @@ def interval_join(
     # spread a few-row-group local scan before the bucket join: the join +
     # refine fan-out is per-event compute the single scan task would
     # otherwise serialize (no-op when the scan is already spread)
-    from ..functions.text import spread_input
+    from ..session import spread_input
 
     ev = spread_input(events).withColumn("_bucket", F.floor(ev_us / F.lit(b_us)))
     out = ev.join(iv_b, "_bucket").filter(refine).drop("_bucket")

@@ -230,7 +230,7 @@ def pip_join(
     # candidate join + convex refine is per-point compute that a 1-6 task
     # scan would serialize (guide §2.5 input skew; no-op when the fact
     # side is already well-partitioned — the cluster case)
-    from ..functions.text import spread_input
+    from ..session import spread_input
 
     pts = spread_input(obs).withColumn("cell", cell_of(x, y, res))
     j = pts.join(buckets, "cell", "inner")

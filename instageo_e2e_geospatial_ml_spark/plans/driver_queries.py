@@ -1113,7 +1113,7 @@ def q33_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens per document (pure regexp, JVM-side)."""
     from ..functions.text import BPE_TOKEN_REGEX, bpe_token_count
 
-    from ..functions.text import spread_input
+    from ..session import spread_input
 
     docs = spread_input(_t(spark, sf_dir, "documents"))
     return docs.select(
@@ -1303,7 +1303,7 @@ def q36_json_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured extraction: pull the integer field out of the JSON
     props column and aggregate per event type (the mean is derived from
     the EXACT integer sum so it is order-independent)."""
-    from ..functions.text import spread_input
+    from ..session import spread_input
 
     # project to the two needed columns BEFORE the spread (guide §2.3),
     # then parse JSON across the cluster, not in the one scan task
@@ -1553,7 +1553,7 @@ def q30_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scrubbed text digest + how many rows changed."""
     from ..functions.text import scrub_pii
 
-    from ..functions.text import spread_input
+    from ..session import spread_input
 
     d = spread_input(_t(spark, sf_dir, "documents"))
     # inject deterministic PII shapes into a third of the docs
@@ -3302,11 +3302,11 @@ ORACLES["q79_kmv_sketch"] = Q79_SQL
 
 
 def q80_grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grid DBSCAN (operators/density.grid_dbscan): dense 64x64 cells over
+    """Grid DBSCAN (operators/dedup.grid_dbscan): dense 64x64 cells over
     the lineitem-derived integer point grid, 8-connected components via
     pointer jumping. Oracle: recursive-CTE reachability twin (the q32
     pattern) over the same dense-cell adjacency."""
-    from ..operators.density import grid_dbscan
+    from ..operators.dedup import grid_dbscan
 
     pts = _t(spark, sf_dir, "lineitem").select(
         (F.col("l_partkey") % 3600).alias("px"),

@@ -20,7 +20,7 @@ join is a broadcast hash join, the as-of pick is one shuffle keyed by
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -48,16 +48,13 @@ class ChipPipelineConfig:
     band_order: tuple = ("B02", "B03", "B04", "B8A", "B11", "B12")
     n_salt: int = 4
     shift_to_month_start: bool = False
-    extra: dict = field(default_factory=dict)
 
 
-def build_records(
-    obs: DataFrame, catalog: DataFrame, cfg: ChipPipelineConfig, persist_obs: bool = True
-) -> DataFrame:
+def build_records(obs: DataFrame, catalog: DataFrame, cfg: ChipPipelineConfig) -> DataFrame:
     """observations × granule catalog → valid records with granule sets.
 
     The prepared obs table feeds three branches (temporal expansion, the
-    PIP join, the final re-join); persist_obs caches it once instead of
+    PIP join, the final re-join); it is persisted once instead of
     re-running the MGRS UDF + density filter per branch (at warehouse
     scale this would be a checkpointed table instead of an in-session
     cache). The as-of pick runs without the null-preserving join-back
@@ -68,9 +65,7 @@ def build_records(
     o = normalize_dates(obs, shift_to_month_start=cfg.shift_to_month_start)
     o = assign_tiles(o)
     o = density_filter(o, cfg.min_count, keep_counts=False)
-    o = o.withColumn("obs_id", F.monotonically_increasing_id())
-    if persist_obs:
-        o = o.persist()
+    o = o.withColumn("obs_id", F.monotonically_increasing_id()).persist()
 
     steps = expand_temporal_steps(
         o, num_steps=cfg.num_steps, temporal_step=cfg.temporal_step
@@ -105,7 +100,6 @@ def run_chip_pipeline(
     images: DataFrame,
     cfg: ChipPipelineConfig,
     checkpoint: CheckpointTable | None = None,
-    payload_source: str = "rows",
     decode_counter=None,
 ) -> DataFrame:
     """Full pipeline → chip table DataFrame (appended to `checkpoint` when
@@ -128,12 +122,13 @@ def run_chip_pipeline(
         masking_strategy=cfg.masking_strategy,
         task_type=cfg.task_type,
         band_order=cfg.band_order,
-        payload_source=payload_source,
         n_salt=cfg.n_salt,
         decode_counter=decode_counter,
     )
     if checkpoint is not None:
         checkpoint.append(chips, metrics_cols=["valid_px", "n_label_px"])
+        if not checkpoint.exists():  # nothing committed yet: no table to read
+            return chips.limit(0).withColumn("_snapshot_id", F.lit(None).cast("string"))
         return checkpoint.read()
     return chips
 
@@ -147,7 +142,6 @@ def run_chip_pipeline_streaming(
     cfg: ChipPipelineConfig,
     checkpoint: CheckpointTable,
     stream_checkpoint_dir: str,
-    payload_source: str = "rows",
     max_files: int = 16,
 ) -> DataFrame:
     """Incremental chip ingestion: J8 resumability upgraded to continuous
@@ -183,10 +177,7 @@ def run_chip_pipeline_streaming(
         if batch_df.isEmpty():
             return
         # appends to the checkpoint inside (atomic snapshot commit)
-        run_chip_pipeline(
-            batch_df, catalog, images, cfg,
-            checkpoint=checkpoint, payload_source=payload_source,
-        )
+        run_chip_pipeline(batch_df, catalog, images, cfg, checkpoint=checkpoint)
 
     q = (
         stream.writeStream.foreachBatch(_process)

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -44,6 +44,27 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def spread_input(df: DataFrame) -> DataFrame:
+    """Spread rows across the cluster before a compute- or explode-heavy
+    stage (guide §2.5 'input skew'): a small one-file parquet table scans
+    as ONE task, and tokenize + explode or a per-row kernel then makes
+    that task the whole job's critical path.
+
+    The decision counts input FILES, not planned splits:
+    repartition(defaultParallelism) when the frame reads from fewer files
+    than that, else return it unchanged. So one large multi-split file is
+    still repartitioned, while many small files are left alone. A frame
+    with no input files (createDataFrame, a post-join intermediate) is
+    sized by its RDD partition count instead; the RDD conversion cost
+    only hits that in-memory path."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    files = df.inputFiles()
+    current = len(files) if files else df.rdd.getNumPartitions()
+    if current < target:
+        return df.repartition(target)
+    return df
 
 
 TESTDATA_TABLES = (

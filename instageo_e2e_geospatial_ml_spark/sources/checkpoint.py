@@ -24,7 +24,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -104,14 +104,25 @@ class CheckpointTable:
 
     def append(self, df: DataFrame, metrics_cols: list[str] | None = None) -> dict:
         """Idempotent append: anti-join on key, write data + per-partition
-        lineage manifest, log the snapshot. Returns the snapshot record."""
+        lineage manifest, log the snapshot. Returns the snapshot record.
+
+        A batch with no uncommitted rows commits nothing: the record has
+        n_rows == 0 and no snapshot_id, and the log is unchanged. The row
+        count is observed on the write itself, so an empty first batch
+        (whose write leaves no data file to read back) never reads."""
         batch = self.filter_uncommitted(df)
         snapshot_id = uuid.uuid4().hex[:16]
-        batch = batch.withColumn("_snapshot_id", F.lit(snapshot_id))
+        written = Observation()
+        batch = batch.withColumn("_snapshot_id", F.lit(snapshot_id)).observe(
+            written, F.count(F.lit(1)).alias("n_rows")
+        )
         writer = batch.write.mode("append")
         if self.partition_by:
             writer = writer.partitionBy(self.partition_by)
         writer.parquet(self.data_path)
+        n_rows = written.get["n_rows"]
+        if n_rows == 0:
+            return {"snapshot_id": None, "ts": time.time(), "n_rows": 0}
 
         # per-partition lineage + metrics from what was just committed
         committed = self.spark.read.parquet(self.data_path).filter(
@@ -128,7 +139,6 @@ class CheckpointTable:
             os.path.join(self.manifest_path, snapshot_id)
         )
 
-        n_rows = committed.count()
         rec = {"snapshot_id": snapshot_id, "ts": time.time(), "n_rows": n_rows}
         log = self._log()
         log.append(rec)

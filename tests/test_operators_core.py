@@ -504,6 +504,32 @@ def test_interval_join_matches_theta_join(spark):
     )
 
 
+def test_spread_input_repartitions_only_small_inputs(spark, tmp_path):
+    from instageo_e2e_geospatial_ml_spark.session import spread_input
+
+    target = spark.sparkContext.defaultParallelism
+    assert target > 1
+
+    # file-backed: decided by the number of input files
+    spark.range(100).coalesce(1).write.parquet(str(tmp_path / "one"))
+    one = spark.read.parquet(str(tmp_path / "one"))
+    assert len(one.inputFiles()) == 1
+    spread = spread_input(one)
+    assert spread is not one and spread.rdd.getNumPartitions() == target
+    assert sorted(r.id for r in spread.collect()) == list(range(100))
+
+    spark.range(100).repartition(target).write.parquet(str(tmp_path / "many"))
+    many = spark.read.parquet(str(tmp_path / "many"))
+    assert len(many.inputFiles()) == target
+    assert spread_input(many) is many
+
+    # in memory (no input files): decided by the partition count
+    small = spark.range(100, numPartitions=1)
+    assert spread_input(small).rdd.getNumPartitions() == target
+    wide = spark.range(100, numPartitions=target)
+    assert spread_input(wide) is wide
+
+
 def test_salted_join_row_identical_and_spread(spark):
     import pandas as pd
     from pyspark.sql import functions as F
@@ -1088,7 +1114,7 @@ def test_kmv_sketch_exact_under_k_and_estimate_bounds(spark):
 def test_grid_dbscan_designed_blobs(spark):
     """Two 8-connected dense blobs (one diagonal-touch), one isolated
     dense cell, and sub-threshold noise: exact cluster membership."""
-    from instageo_e2e_geospatial_ml_spark.operators.density import grid_dbscan
+    from instageo_e2e_geospatial_ml_spark.operators.dedup import grid_dbscan
 
     def fill(cx, cy, n):
         # n points inside cell (cx, cy) at cell_size=10
